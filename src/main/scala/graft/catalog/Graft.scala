@@ -90,10 +90,13 @@ object Graft {
   /** Snapshot the latest root (Olympia.java:65-84). */
   def beginTransaction(storage: StorageOps,
       isolationOverride: Option[String] = None): Transaction = {
-    val latest = TreeOps.findLatestRoot(storage)
+    val path = TreeOps.latestRootPath(storage)
       .getOrElse(throw new IllegalStateException("catalog does not exist"))
+    // one read serves both trees: the snapshot and the running copy
+    val bytes = storage.read(path)
+    val latest = TreeOps.rootFromBytes(path, bytes)
     val cd = catalogDef(storage, latest)
-    val running = TreeOps.loadRoot(storage, latest.path.get)
+    val running = TreeOps.rootFromBytes(path, bytes)
     val now = System.currentTimeMillis()
     new Transaction(
       UUID.randomUUID().toString,

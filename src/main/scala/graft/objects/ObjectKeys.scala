@@ -100,6 +100,17 @@ object FileLocations {
     s"vn/$bits"
   }
 
+  /** The version a root node key names — the inverse of
+    * [[rootNodePath]]; `None` for any other key (the hints included).
+    */
+  def rootVersionOf(key: String): Option[Long] = {
+    val bits = key.stripPrefix("vn/")
+    if (key.startsWith("vn/") && bits.length == 64 &&
+        bits.forall(c => c == '0' || c == '1'))
+      Some(java.lang.Long.reverse(java.lang.Long.parseUnsignedLong(bits, 2)))
+    else None
+  }
+
   def newNodePath(): String = s"node/${java.util.UUID.randomUUID()}.arrow"
 
   def newCatalogDefPath(): String = s"def/catalog/${java.util.UUID.randomUUID()}.json"
@@ -117,6 +128,30 @@ object FileLocations {
     * (ObjectDefinitions.java:176-179).
     */
   def distTransactionDefPath(txnId: String): String = s"def/dtxn/$txnId.json"
+
+  private val WriteOnceDefDirs =
+    Seq("def/catalog/", "def/ns/", "def/table/", "def/view/")
+  private val WriteOnceSuffixes =
+    Seq(".metadata.json", ".manifest.json", ".snaplog.json")
+
+  /** Keys the format creates exactly once — an atomic create under a
+    * fresh UUID or version number — and never overwrites: tree nodes,
+    * root versions, object definitions, table-metadata documents,
+    * manifest segments and snapshot-log segments. A reader may cache
+    * their bytes forever without asking the store again. Every other
+    * key can change in place: the `vn/latest` and `vn/oldest` hints,
+    * suspended distributed transactions (`def/dtxn*`), puffin
+    * statistics (re-analysis replaces them) and bloom sidecars (a
+    * retried task rewrites them).
+    *
+    * Deletion does not break the rule: expiration removes root
+    * versions, and every reader checks a root's existence against the
+    * store before it treats that root as live.
+    */
+  def isWriteOnce(key: String): Boolean =
+    key.startsWith("node/") || rootVersionOf(key).isDefined ||
+      WriteOnceDefDirs.exists(key.startsWith) ||
+      WriteOnceSuffixes.exists(key.endsWith)
 
   def tableMetadataPath(ns: String, table: String): String =
     s"data/$ns/$table/meta/${java.util.UUID.randomUUID()}.metadata.json"

@@ -144,13 +144,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       } finally txn.close() // release Arrow buffers of the snapshot trees
   }
 
-  private[spark] def tableKey(td: TableDef): String = {
-    val root = TreeOps.findLatestRoot(storage).get
-    try ObjectKeys.tableKey(td.namespaceName, td.name,
-      Graft.catalogDef(storage, root))
-    finally root.close()
-  }
-
   private def ns1(namespace: Array[String]): String = {
     if (namespace.length != 1)
       throw new NoSuchNamespaceException(namespace)

@@ -4,7 +4,7 @@ import java.util.{Set => JSet}
 import scala.jdk.CollectionConverters._
 
 import graft.format.{DataFileEntry, TableMetadata}
-import graft.objects.TableDef
+import graft.objects.{ObjectKeys, TableDef}
 import graft.storage.StorageOps
 import graft.txn.{Action, ActionType, Transaction}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
@@ -170,6 +170,13 @@ class GraftTable(
   private[spark] def dataRootAbs: String = storage.absolute(
     graft.objects.FileLocations.tableDataDir(tableDef.namespaceName, tableDef.name))
 
+  /** This table's key in the catalog tree, in the name widths of the
+    * catalog definition its own transaction's root names.
+    */
+  private lazy val treeKey: String =
+    ObjectKeys.tableKey(tableDef.namespaceName, tableDef.name,
+      graft.catalog.Graft.catalogDef(storage, txn.runningRoot))
+
   /** Record this read in the transaction's action log (conflict
     * detection under SERIALIZABLE — reference TableSelectDef,
     * actions.proto:94-97).
@@ -180,7 +187,7 @@ class GraftTable(
     // with the footer-harvested stat ranges appends record
     val renames = ColumnMapping.renames(schema)
     val phys = filters.map(ColumnMapping.toPhysicalExpr(_, renames))
-    txn.record(Action(ActionType.TableSelect, catalog.tableKey(tableDef),
+    txn.record(Action(ActionType.TableSelect, treeKey,
       Map("columns" -> columns.map(c => renames.getOrElse(c, c)).mkString(","),
         "filters" -> phys.map(_.sql).mkString(" AND ")) ++
         ReadIntervals.fromFilters(phys)))
@@ -215,7 +222,7 @@ class GraftTable(
       onBuild = (columns, filters) =>
         // projection + pushed predicates captured as the txn's read
         // set (reference TableSelectDef, actions.proto:94-97)
-        txn.record(Action(ActionType.TableSelect, catalog.tableKey(tableDef),
+        txn.record(Action(ActionType.TableSelect, treeKey,
           Map("columns" -> columns.mkString(","),
             "filters" -> filters.map(_.sql).mkString(" AND ")) ++
             ReadIntervals.fromFilters(filters))),

@@ -7,6 +7,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import graft.objects.FileLocations
+
 /** The narrow API a cloud object store actually offers (reference:
   * s3/src/main/java/org/format/olympia/storage/s3/S3StorageOps.java and
   * S3AtomicOutputStream.java:36-49): no rename, no directories, no
@@ -222,23 +224,41 @@ class DirectoryObjectStoreClient(val backingDir: String) extends ObjectStoreClie
   *
   * - `writeAtomic` IS a conditional PUT — no staging file, no rename;
   *   losing the race surfaces as the store's precondition failure.
-  * - `read` goes through a local read cache keyed by etag (reference
-  *   `prepareToReadLocal`, S3StorageOps.java:111-135): node files are
-  *   immutable once created, so a cache hit skips the remote GET
-  *   entirely; the mutable `vn/latest` hint revalidates via HEAD and
-  *   refetches on etag change.
+  * - Reads follow the format's write-once rule
+  *   ([[graft.objects.FileLocations.isWriteOnce]]): a write-once key
+  *   (tree node, root version, object definition, table-metadata
+  *   document, manifest or snapshot-log segment) is fetched at most
+  *   once per handle and then served from the local [[ReadCache]]
+  *   with no client call at all. Every other key — the `vn/latest`
+  *   hint above all — is read with exactly one GET, never a HEAD.
+  * - `exists` and `sizeOf` always ask the store: existence is how
+  *   readers notice that history expiration deleted a root version.
+  *
+  * A client binding must keep the rule's contract: a key in the
+  * write-once set is never overwritten, and never deleted and then
+  * re-created with other bytes.
   */
-class ObjectStoreOps(val client: ObjectStoreClient) extends StorageOps {
+class ObjectStoreOps private[storage] (val client: ObjectStoreClient,
+    cacheBytes: Long) extends StorageOps {
 
-  private val cacheDir: Path = Files.createTempDirectory("graft-oscache")
-  private val cache = new ConcurrentHashMap[String, (String, Path)]()
+  def this(client: ObjectStoreClient) = this(client, ReadCache.MaxBytes)
+
+  private val cache = new ReadCache(cacheBytes)
 
   override def root: String = client.absolute("")
 
   override def exists(rel: String): Boolean = client.head(rel).isDefined
 
+  private def fetch(rel: String): (Array[Byte], String) =
+    client.get(rel).getOrElse(throw new java.nio.file.NoSuchFileException(rel))
+
   override def read(rel: String): Array[Byte] =
-    Files.readAllBytes(prepareToReadLocal(rel))
+    if (!FileLocations.isWriteOnce(rel)) fetch(rel)._1
+    else cache.bytes(rel).getOrElse {
+      val (bytes, tag) = fetch(rel)
+      cache.put(rel, bytes, tag)
+      bytes
+    }
 
   override def sizeOf(rel: String): Long =
     client.size(rel).getOrElse(
@@ -249,41 +269,31 @@ class ObjectStoreOps(val client: ObjectStoreClient) extends StorageOps {
     case _ => StorageConf(root, StorageConf.Opaque)
   }
 
-  /** Download-once: returns a local file holding the object's current
-    * content, revalidating the cached copy against the store's etag.
+  /** A local file holding the object's current content: a cached
+    * write-once object costs no client call, anything else one GET.
     */
-  override def prepareToReadLocal(rel: String): Path = {
-    val remoteTag = client.head(rel).getOrElse(
-      throw new java.nio.file.NoSuchFileException(rel))
-    Option(cache.get(rel)) match {
-      case Some((tag, path)) if tag == remoteTag && Files.exists(path) => path
-      case _ =>
-        val (bytes, tag) = client.get(rel).getOrElse(
-          throw new java.nio.file.NoSuchFileException(rel))
-        val local = Files.createTempFile(cacheDir, "obj-", ".bin")
-        Files.write(local, bytes)
-        cache.put(rel, (tag, local))
-        local
+  override def prepareToReadLocal(rel: String): Path =
+    (if (FileLocations.isWriteOnce(rel)) cache.file(rel) else None).getOrElse {
+      val (bytes, tag) = fetch(rel)
+      cache.put(rel, bytes, tag)
     }
-  }
 
   override def writeAtomic(rel: String, data: Array[Byte]): Unit = {
     if (!client.putIfNoneMatch(rel, data))
       throw new AtomicSealFailureException(rel)
-    // seed the read cache: we hold the exact bytes the store accepted
-    val local = Files.createTempFile(cacheDir, "obj-", ".bin")
-    Files.write(local, data)
-    cache.put(rel, (ObjectStoreClient.md5(data), local))
+    // seed the read cache: these are the bytes the store holds for good
+    if (FileLocations.isWriteOnce(rel))
+      cache.put(rel, data, ObjectStoreClient.md5(data))
   }
 
   override def overwrite(rel: String, data: Array[Byte]): Unit = {
     client.put(rel, data)
-    cache.remove(rel)
+    cache.remove(Seq(rel))
   }
 
   override def deleteBatch(rels: Seq[String]): Unit = {
     client.delete(rels)
-    rels.foreach(cache.remove)
+    cache.remove(rels)
   }
 
   override def listPrefix(prefix: String): Seq[String] = {
@@ -308,14 +318,128 @@ class ObjectStoreOps(val client: ObjectStoreClient) extends StorageOps {
   override def move(srcRel: String, dstRel: String): Unit = {
     client.copy(srcRel, dstRel)
     client.delete(Seq(srcRel))
-    cache.remove(srcRel)
+    cache.remove(Seq(srcRel))
   }
 
   override def deleteTree(prefix: String): Unit = {
     val keys = listDeep(prefix)
     client.delete(keys)
-    keys.foreach(cache.remove)
+    cache.remove(keys)
   }
 
   override def absolute(rel: String): String = client.absolute(rel)
+}
+
+/** Local files holding fetched object bytes for one [[ObjectStoreOps]]
+  * handle, bounded by `maxBytes` ([[ReadCache.MaxBytes]] outside tests)
+  * with least-recently-used eviction. A key keeps one file: a
+  * superseded or evicted file is deleted at once, and all of a
+  * handle's files go when the handle becomes unreachable. The files
+  * live in one directory per JVM, removed at exit.
+  */
+private[storage] final class ReadCache(maxBytes: Long) {
+  import ReadCache._
+
+  private val state = new State
+  cleaner.register(this, state)
+
+  /** The key's cached file, if any; counts as a use. */
+  def file(key: String): Option[Path] = state.synchronized {
+    Option(state.entries.get(key)).map(_.file)
+  }
+
+  /** The key's cached bytes; `None` also when a concurrent eviction
+    * removed the file between lookup and read.
+    */
+  def bytes(key: String): Option[Array[Byte]] =
+    file(key).flatMap { f =>
+      try Some(Files.readAllBytes(f))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    }
+
+  /** Cache `data` (etag `tag`) under `key` and return its local file.
+    * A file already holding the same etag is kept, so concurrent
+    * readers of unchanged content never lose the file they were given.
+    */
+  def put(key: String, data: Array[Byte], tag: String): Path = {
+    def same = Option(state.entries.get(key)).filter(_.tag == tag).map(_.file)
+    state.synchronized(same).getOrElse {
+      val f = Files.createTempFile(dir, "obj-", ".bin")
+      Files.write(f, data)
+      val (kept, dropped) = state.synchronized {
+        same match {
+          case Some(cached) => (cached, Seq(f)) // a concurrent reader won
+          case None => (f, insert(key, Entry(tag, f, data.length.toLong)))
+        }
+      }
+      dropped.foreach(Files.deleteIfExists)
+      kept
+    }
+  }
+
+  /** Add `e` under the lock; returns the files it superseded or evicted. */
+  private def insert(key: String, e: Entry): Seq[Path] = {
+    val out = Seq.newBuilder[Path]
+    Option(state.entries.put(key, e)).foreach { old =>
+      state.bytes -= old.size
+      out += old.file
+    }
+    state.bytes += e.size
+    // the new entry is last in access order: it is never the one evicted
+    val it = state.entries.values().iterator()
+    while (state.bytes > maxBytes && state.entries.size > 1) {
+      val eldest = it.next()
+      it.remove()
+      state.bytes -= eldest.size
+      out += eldest.file
+    }
+    out.result()
+  }
+
+  def remove(keys: Seq[String]): Unit = {
+    val dropped = state.synchronized {
+      keys.flatMap(k => Option(state.entries.remove(k))).map { e =>
+        state.bytes -= e.size
+        e.file
+      }
+    }
+    dropped.foreach(Files.deleteIfExists)
+  }
+}
+
+private[storage] object ReadCache {
+  /** Local bytes one handle keeps cached. */
+  val MaxBytes: Long = 128L << 20
+
+  private final case class Entry(tag: String, file: Path, size: Long)
+
+  /** A handle's entries, eldest use first, and their total size. Also
+    * the cleaning action that deletes the files once the handle is
+    * unreachable, so it must not refer to the handle.
+    */
+  private final class State extends Runnable {
+    val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+    var bytes = 0L
+    override def run(): Unit = {
+      val all = synchronized {
+        val fs = entries.values().asScala.map(_.file).toList
+        entries.clear()
+        bytes = 0L
+        fs
+      }
+      all.foreach(Files.deleteIfExists)
+    }
+  }
+
+  private val cleaner = java.lang.ref.Cleaner.create()
+
+  private lazy val dir: Path = {
+    val d = Files.createTempDirectory("graft-oscache")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try {
+        Using.resource(Files.list(d))(_.iterator().asScala.foreach(Files.deleteIfExists))
+        Files.deleteIfExists(d)
+      } catch { case _: java.io.IOException => () }))
+    d
+  }
 }

@@ -26,7 +26,7 @@ trait StorageOps {
 
   /** A LOCAL file holding the object's current content — filesystems
     * return the file itself; remote stores download through their
-    * etag-validated read cache (reference `prepareToReadLocal`,
+    * read cache (reference `prepareToReadLocal`,
     * S3StorageOps.java:111-135). This is the only sanctioned way to
     * hand an object to a local-file reader (e.g. a parquet footer
     * parse at commit time).

@@ -49,15 +49,25 @@ object TreeOps {
     root
   }
 
-  def loadNode(storage: StorageOps, path: String): TreeNode = {
-    val file = new NodeFile(storage.read(path))
+  def loadNode(storage: StorageOps, path: String): TreeNode =
+    nodeFromBytes(storage.read(path))
+
+  private def nodeFromBytes(bytes: Array[Byte]): TreeNode = {
+    val file = new NodeFile(bytes)
     val node = new TreeNode(Some(file))
     node.leftmostChildPath = file.metadata.get(MLeftmost)
     node
   }
 
-  def loadRoot(storage: StorageOps, path: String): TreeRoot = {
-    val node = loadNode(storage, path)
+  def loadRoot(storage: StorageOps, path: String): TreeRoot =
+    rootFromBytes(path, storage.read(path))
+
+  /** A root over bytes already read from `path`. Each call builds an
+    * independent tree, so one read can serve both a transaction's
+    * beginning snapshot and its running copy.
+    */
+  def rootFromBytes(path: String, bytes: Array[Byte]): TreeRoot = {
+    val node = nodeFromBytes(bytes)
     val md = node.persisted.get.metadata
     val root = new TreeRoot(
       node,
@@ -324,31 +334,31 @@ object TreeOps {
     * TreeOperations.java:342-371 — including the fix for its probe
     * off-by-one, SURVEY §4.3.5).
     */
-  def findLatestRoot(storage: StorageOps): Option[TreeRoot] = {
+  def findLatestRoot(storage: StorageOps): Option[TreeRoot] =
+    latestRootPath(storage).map(loadRoot(storage, _))
+
+  /** Path of the latest committed root, resolved without loading it. */
+  def latestRootPath(storage: StorageOps): Option[String] = {
+    // the hint is BEST-EFFORT: a missing hint, or one a backend swaps
+    // or expires mid-read, degrades to the probe-from-v0 path
     val hint =
-      if (storage.exists(FileLocations.LatestVersionHint))
-        // the hint is BEST-EFFORT: tolerate an exists→read race (a
-        // backend swapping or expiring the file between the two calls)
-        // by degrading to the probe-from-v0 path, never failing the txn
-        try new String(storage.read(FileLocations.LatestVersionHint), "UTF-8")
-          .trim.toLong
-        catch { case _: java.io.IOException => 0L }
-      else 0L
+      try new String(storage.read(FileLocations.LatestVersionHint), "UTF-8")
+        .trim.toLong
+      catch { case _: java.io.IOException => 0L }
+    // existence is asked of the store, never of a read cache: history
+    // expiration deletes root versions a reader may still hold
     var v =
       if (storage.exists(FileLocations.rootNodePath(hint))) hint
       else if (storage.exists(FileLocations.rootNodePath(0L))) 0L
       else {
         // stale hint AND v0 expired (history expiration): recover by
         // listing vn/ and decoding the reversed-binary version names
-        val versions = storage.listPrefix("vn")
-          .map(_.stripPrefix("vn/"))
-          .filter(n => n.length == 64 && n.forall(c => c == '0' || c == '1'))
-          .map(bits => java.lang.Long.reverse(java.lang.Long.parseUnsignedLong(bits, 2)))
+        val versions = storage.listPrefix("vn").flatMap(FileLocations.rootVersionOf)
         if (versions.isEmpty) return None
         versions.max
       }
     while (storage.exists(FileLocations.rootNodePath(v + 1))) v += 1
-    Some(loadRoot(storage, FileLocations.rootNodePath(v)))
+    Some(FileLocations.rootNodePath(v))
   }
 
   /** Catalog time travel by version: walk the previous_root chain

@@ -263,6 +263,39 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(graft.catalog.Graft.catalogExists(cat.storage))
   }
 
+  test("stale latest hint on the object store: a cached expired root is never the latest") {
+    val wh = Files.createTempDirectory("graft-mwh-os").toString
+    spark.conf.set("spark.sql.catalog.mos", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.mos.warehouse", wh)
+    spark.conf.set("spark.sql.catalog.mos.storage", "object")
+    spark.sql("CREATE NAMESPACE mos.ns1")
+    spark.sql("CREATE TABLE mos.ns1.h (k BIGINT)")
+    (1 to 3).foreach(i => spark.sql(s"INSERT INTO mos.ns1.h VALUES ($i)"))
+    val ocat = spark.sessionState.catalogManager.catalog("mos")
+      .asInstanceOf[GraftCatalog]
+    // a second handle on the bucket reads every root version, the one
+    // the hint names included, before expiration deletes the old ones
+    val reader = new graft.storage.ObjectStoreOps(
+      new graft.storage.DirectoryObjectStoreClient(wh))
+    val before = graft.tree.TreeOps.latestVersion(reader).get
+    (0L to before).foreach(v =>
+      reader.read(graft.objects.FileLocations.rootNodePath(v)))
+    assert(Maintenance.expireCatalogVersions(ocat, keepLast = 2) > 0)
+    // poison the hint to an expired version the reader still holds
+    ocat.storage.overwrite("vn/latest", "1".getBytes)
+    assert(reader.read(graft.objects.FileLocations.rootNodePath(1L)).nonEmpty,
+      "premise: the reader's cache still serves the expired root")
+    val latest = graft.tree.TreeOps.findLatestRoot(reader).get
+    try {
+      assert(latest.version == before)
+      assert(graft.catalog.Graft.catalogExists(reader))
+      val e = intercept[IllegalArgumentException] {
+        graft.tree.TreeOps.findRootForVersion(reader, latest, 1L)
+      }
+      assert(e.getMessage.contains("oldest retained"), e.getMessage)
+    } finally latest.close()
+  }
+
   test("catalog version expiration bounds time travel, keeps latest") {
     spark.sql("CREATE TABLE mcat.ns1.h (k BIGINT)")
     (1 to 3).foreach(i => spark.sql(s"INSERT INTO mcat.ns1.h VALUES ($i)"))

@@ -132,33 +132,60 @@ class DirectoryObjectStoreOpsSpec extends StorageOpsContract {
   */
 class ObjectStoreReadCacheSpec extends AnyFunSuite {
 
-  test("read cache serves immutable objects without refetch, revalidates mutated ones") {
-    val client = new InMemoryObjectStoreClient
-    val counting = new ObjectStoreClient {
-      val gets = new AtomicInteger(0)
-      override def head(key: String) = client.head(key)
-      override def size(key: String) = client.size(key)
-      override def get(key: String) = { gets.incrementAndGet(); client.get(key) }
-      override def putIfNoneMatch(key: String, data: Array[Byte]) =
-        client.putIfNoneMatch(key, data)
-      override def put(key: String, data: Array[Byte]) = client.put(key, data)
-      override def delete(keys: Seq[String]) = client.delete(keys)
-      override def list(prefix: String) = client.list(prefix)
-      override def listDeep(prefix: String) = client.listDeep(prefix)
-      override def copy(srcKey: String, dstKey: String) = client.copy(srcKey, dstKey)
-      override def absolute(key: String) = client.absolute(key)
-    }
-    val ops = new ObjectStoreOps(counting)
-    ops.writeAtomic("node/a", "v1".getBytes)
-    // writeAtomic seeded the cache: reads hit local disk, zero GETs
-    assert(new String(ops.read("node/a")) == "v1")
-    assert(new String(ops.read("node/a")) == "v1")
-    assert(counting.gets.get() == 0)
-    // a mutation BEHIND the ops handle (another process overwrote the
-    // hint object) changes the etag — HEAD revalidation must refetch
-    client.put("node/a", "v2".getBytes)
-    assert(new String(ops.read("node/a")) == "v2")
-    assert(counting.gets.get() == 1)
+  test("a mutable key is re-read with one GET and no HEAD: the vn/latest hint") {
+    val store = new InMemoryObjectStoreClient
+    val client = new CountingClient(store)
+    val ops = new ObjectStoreOps(client)
+    ops.overwrite("vn/latest", "1".getBytes)
+    assert(new String(ops.read("vn/latest")) == "1")
+    val before = ops.prepareToReadLocal("vn/latest")
+    // another process moves the hint behind this handle
+    store.put("vn/latest", "2".getBytes)
+    client.reset()
+    assert(new String(ops.read("vn/latest")) == "2")
+    assert(client.count("get") == 1 && client.calls == 1,
+      s"expected exactly one GET, got ${client.calls} calls")
+    // the local copy is replaced, and the superseded file deleted
+    val after = ops.prepareToReadLocal("vn/latest")
+    assert(new String(Files.readAllBytes(after)) == "2")
+    assert(!Files.exists(before))
+    assert(client.count("head") == 0)
+  }
+
+  test("a write-once key costs one GET on a handle's first read, no call after") {
+    val store = new InMemoryObjectStoreClient
+    val writer = new CountingClient(store)
+    val a = new ObjectStoreOps(writer)
+    a.writeAtomic("node/a.arrow", "v1".getBytes)
+    writer.reset()
+    // writeAtomic seeded the writer's cache
+    assert(new String(a.read("node/a.arrow")) == "v1")
+    assert(writer.calls == 0)
+    val reader = new CountingClient(store)
+    val b = new ObjectStoreOps(reader)
+    assert(new String(b.read("node/a.arrow")) == "v1")
+    assert(reader.count("get") == 1 && reader.calls == 1)
+    assert(new String(b.read("node/a.arrow")) == "v1")
+    assert(new String(Files.readAllBytes(b.prepareToReadLocal("node/a.arrow"))) == "v1")
+    assert(reader.calls == 1, s"cached write-once reads made ${reader.calls - 1} calls")
+  }
+
+  test("the read cache is bounded: a key evicted past the cap is re-read with one GET") {
+    val client = new CountingClient(new InMemoryObjectStoreClient)
+    val ops = new ObjectStoreOps(client, 10L)
+    ops.writeAtomic("node/a", "aaaaaa".getBytes)
+    val aFile = ops.prepareToReadLocal("node/a")
+    ops.writeAtomic("node/b", "bbbbbb".getBytes) // 12 bytes > 10: evicts a
+    assert(!Files.exists(aFile), "an evicted file must be deleted")
+    client.reset()
+    assert(new String(ops.read("node/b")) == "bbbbbb")
+    assert(client.calls == 0)
+    assert(new String(ops.read("node/a")) == "aaaaaa")
+    assert(client.count("get") == 1 && client.calls == 1)
+    // re-caching a evicted b, the least recently used
+    assert(new String(ops.read("node/a")) == "aaaaaa")
+    assert(new String(ops.read("node/b")) == "bbbbbb")
+    assert(client.count("get") == 2 && client.calls == 2)
   }
 
   test("two handles over one store: second process reads the first's writes") {
